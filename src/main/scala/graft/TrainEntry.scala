@@ -650,9 +650,9 @@ object TrainEntry {
   // ---------------------------------------------------------------
   private def q144(s: SparkSession, dir: String): DataFrame = {
     import graft.text.Bpe
-    val words = Bpe.wordCounts(
-        t(s, dir, "documents").select("text"), "text")
-      .persist() // train makes N passes; encode one more
+    // train makes N passes; encode one more
+    val words = graft.plans.Plans.barrier(Bpe.wordCounts(
+        t(s, dir, "documents").select("text"), "text"))
     val merges = Bpe.train(s, words, BpeMerges)
     Bpe.tokenCensus(Bpe.applyMerges(words, merges))
       .orderBy(col("n").desc, col("token")).limit(30)

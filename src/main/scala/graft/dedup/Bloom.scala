@@ -6,6 +6,8 @@ import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
+import graft.plans.Plans.barrier
+
 /** Bloom-filter membership sketch over Long keys, built on Spark's
   * own runtime-filter machinery (`BloomFilterAggregate` /
   * `BloomFilterMightContain` — the codegen'd expressions Spark
@@ -79,10 +81,10 @@ object Bloom {
           .as("gram"))
 
     // evalGrams feeds three passes (count, sketch build, exact join);
-    // cache covers the two eager ones here so eval texts tokenize+hash
-    // once for them. The lazy join pass recomputes the (small) eval
-    // side at consumer evaluation — cheap next to the train scan.
-    val evalGrams = grams(eval, "eval_id").cache()
+    // the barrier materializes it once, so eval texts tokenize+hash
+    // once for all three, and its blocks are reclaimed with the
+    // returned frame.
+    val evalGrams = barrier(grams(eval, "eval_id"))
     // one cheap count over the (small) eval side sizes the sketch;
     // bitsPerKey=16 ≈ 0.05% fp at the optimal hash count
     val items = math.max(evalGrams.count(), 1L)
@@ -96,7 +98,6 @@ object Bloom {
         (1L << 26).toString).toLong
     val sketch = build(evalGrams, col("gram"), items,
       math.min(items * bitsPerKey.toLong, maxNumBits))
-    evalGrams.unpersist(blocking = false)
 
     grams(train, "train_id")
       .filter(mightContain(sketch, col("gram")))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextHashes.sortedJaccard
 import graft.functions.VectorOps
 import graft.plans.Plans.barrier
 
@@ -66,19 +67,6 @@ object Dedup {
     */
   def hashedSet(features: Column): Column =
     array_sort(array_distinct(transform(features, f => xxhash64(f))))
-
-  /** Exact Jaccard between two hashed sets (unrounded — threshold
-    * filters must compare against this; round only for display).
-    *
-    * Native one-merge-pass since r14 (every caller passes the
-    * SORTED-DISTINCT arrays [[hashedSet]]/wordShingleHashes emit):
-    * the array_intersect/array_union form built two hash sets per
-    * candidate pair — the dominant task time of the threshold-sweep
-    * and pair-verify steps. |∩|/|∪| value-identical (|∪| =
-    * |A|+|B|−|∩| on distinct inputs, 0/0 stays NaN).
-    */
-  def setJaccard(a: Column, b: Column): Column =
-    graft.functions.TextHashes.sortedJaccard(a, b)
 
   /** MinHash signature over a hashed feature set — HOF REFERENCE
     * IMPLEMENTATION, kept for the measured comparison in SURVEY §4
@@ -171,7 +159,7 @@ object Dedup {
       // reported value stays unrounded too: |∩|/|∪| is an exact small
       // int division, identical bitwise in any IEEE engine — rounding
       // would only ADD engine-specific half-way behavior.
-      .select(col("a"), col("b"), setJaccard(col("hs_a"), col("hs_b")).as("jaccard"))
+      .select(col("a"), col("b"), sortedJaccard(col("hs_a"), col("hs_b")).as("jaccard"))
       .filter(col("jaccard") >= tau)
       .distinct()
   }
@@ -262,7 +250,7 @@ object Dedup {
       .filter(greatest(size(col("hs_a")), size(col("hs_b"))) * tau <=
         least(size(col("hs_a")), size(col("hs_b"))))
       .select(col("a"), col("b"),
-        setJaccard(col("hs_a"), col("hs_b")).as("jaccard"))
+        sortedJaccard(col("hs_a"), col("hs_b")).as("jaccard"))
       .filter(col("jaccard") >= tau)
       .distinct() // a pair may collide in several bands
   }

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.plans.Plans.barrier
 
 /** Multi-source BFS hop distance over an undirected edge list —
   * "how many clicks from the seed set is every node?" — the reach
@@ -20,7 +20,7 @@ import org.apache.spark.storage.StorageLevel
   * what lets the DuckDB oracle UNROLL a fixed round count while
   * Spark iterates to an empty frontier ([[KCore]]'s contract).
   *
-  * Scale shape: edges symmetrize + dedupe once and persist
+  * Scale shape: edges symmetrize + dedupe once behind a barrier,
   * hash-partitioned; each round is one keyed join (edges ⋈
   * frontier) + an anti-join against the labeled set — frontier and
   * labeled sets carry (node, hop) only, never payloads. Driver
@@ -43,34 +43,33 @@ object Bfs {
     val dir = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull &&
         col("a") =!= col("b"))
-    val sym = dir.union(dir.select(col("b").as("a"), col("a").as("b")))
+    // no standalone count: round 1's frontier count materializes the
+    // barriered sym, and every later round reuses its partitioning
+    val sym = barrier(dir.union(dir.select(col("b").as("a"), col("a").as("b")))
       .distinct()
-      .repartition(col("a"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    sym.count() // materialize once; every round reuses the partitioning
+      .repartition(col("a")))
 
-    var labeled = seeds.select(col("node")).distinct()
-      .withColumn("hops", lit(0))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    var labeled = barrier(seeds.select(col("node")).distinct()
+      .withColumn("hops", lit(0)))
     var frontier = labeled
     var nFrontier = frontier.count()
     var hop = 0
     while (nFrontier > 0 && hop < maxHops) {
       hop += 1
-      val next = sym
+      val next = barrier(sym
         .join(frontier.select(col("node").as("a")), "a")
         .select(col("b").as("node")).distinct()
         .join(labeled, Seq("node"), "left_anti")
-        .withColumn("hops", lit(hop))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .withColumn("hops", lit(hop)))
       nFrontier = next.count()
-      // labeled stays a LAZY union of the persisted per-hop levels
-      // (r15): every leaf is already cached and level row sets are
-      // disjoint, so re-materializing the union each round (persist +
-      // count) paid one extra job and a duplicate copy of the whole
-      // labeled set per hop for nothing — the anti-join reads the
-      // same cached bytes either way (guide §5: cache competes with
-      // execution memory; diameter is small, so the union stays flat)
+      // labeled stays a LAZY union of the barriered per-hop levels
+      // (r15): every leaf is already materialized and level row sets
+      // are disjoint, so re-materializing the union each round
+      // (barrier + count) paid one extra job and a duplicate copy of
+      // the whole labeled set per hop for nothing — the anti-join
+      // reads the same checkpointed blocks either way (guide §5:
+      // stored blocks compete with execution memory; diameter is
+      // small, so the union stays flat)
       labeled = labeled.union(next)
       frontier = next
     }

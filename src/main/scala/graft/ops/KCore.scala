@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.plans.Plans.barrier
 
 /** k-core decomposition over an undirected edge list — the
   * graph-hygiene peel next to [[PageRank]]'s authority ranks: the
@@ -22,7 +22,7 @@ import org.apache.spark.storage.StorageLevel
   * convergence round.
   *
   * Scale shape: edges symmetrize + dedupe once (one exchange),
-  * persist hash-partitioned; each round is the alive-filtered degree
+  * barriered hash-partitioned; each round is the alive-filtered degree
   * count — two keyed semi-joins + one partial-aggregated groupBy —
   * and rounds are bounded (each one removes ≥ 1 node or stops).
   * Driver state per round: one count scalar (the [[graft.dedup.Dedup]]
@@ -41,18 +41,16 @@ object KCore {
     val dir = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull &&
         col("a") =!= col("b"))
-    val sym = dir.union(dir.select(col("b").as("a"), col("a").as("b")))
+    val sym = barrier(dir.union(dir.select(col("b").as("a"), col("a").as("b")))
       .distinct()
-      .repartition(col("a"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("a")))
 
     def degrees(alive: DataFrame): DataFrame = sym
       .join(alive.select(col("node").as("a")), "a")
       .join(alive.select(col("node").as("b")), "b")
       .groupBy("a").agg(count(lit(1)).as("deg"))
 
-    var alive = sym.select(col("a").as("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    var alive = barrier(sym.select(col("a").as("node")).distinct())
     var nAlive = alive.count() // bounded driver scalar
     var round = 0
     var stable = false
@@ -69,15 +67,13 @@ object KCore {
       val degs =
         if (round == 0) sym.groupBy("a").agg(count(lit(1)).as("deg"))
         else degrees(alive)
-      val next = degs.filter(col("deg") >= k)
-        .select(col("a").as("node"), col("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val next = barrier(degs.filter(col("deg") >= k)
+        .select(col("a").as("node"), col("deg")))
       val nNext = next.count()
       stable = nNext == nAlive
-      // unpersist the frame that actually holds the previous round's
-      // cache: round 0's alive, afterwards the previous `next`
-      // (alive is a lazy projection of it since r15)
-      if (aliveDeg == null) alive.unpersist() else aliveDeg.unpersist()
+      // the previous round's barrier goes unreferenced here and the
+      // ContextCleaner reclaims its blocks (alive is a lazy projection
+      // of `next` since r15)
       alive = next.select("node")
       aliveDeg = next
       nAlive = nNext

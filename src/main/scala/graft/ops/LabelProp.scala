@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.plans.Plans.barrier
 
 /** Synchronous label propagation (Raghavan et al. 2007) — community
   * detection over an undirected graph, completing the local-graph
@@ -21,7 +21,7 @@ import org.apache.spark.storage.StorageLevel
   *  bit-for-bit (the q131/q147 integer-loop discipline, with string
   *  labels instead of fixed-point scores).
   *
-  * Scale shape: edges symmetrize + dedup once and persist
+  * Scale shape: edges symmetrize + dedup once behind a barrier,
   * hash-partitioned; each round is one keyed join (edges × labels on
   * the 8-byte-hashable node id), one partial-aggregated
   * (node, label) count, and one NODE-keyed window over each node's
@@ -39,11 +39,11 @@ object LabelProp {
   def run(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int): DataFrame = runWithEdges(edges, srcCol, dstCol, iters)._1
 
-  /** [[run]], also returning the symmetric deduped persisted edge set
+  /** [[run]], also returning the symmetric deduped barriered edge set
     * `ed(src, dst)` the rounds iterate over — so a caller that needs
     * the same undirected edges after propagation (e.g.
-    * [[Modularity.census]]'s two label joins) reads the one cached
-    * copy instead of re-evaluating the raw edge lineage from scratch
+    * [[Modularity.census]]'s two label joins) reads the one
+    * materialized copy instead of re-evaluating the raw edge lineage from scratch
     * (r15, guide §2.4: for q306 that lineage is a lineitem-sized
     * window plus two joins, previously executed twice per query).
     */
@@ -51,12 +51,11 @@ object LabelProp {
       dstCol: String, iters: Int): (DataFrame, DataFrame) = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val fwd = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val ed = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
+    val ed = barrier(fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
         col("src") =!= col("dst"))
       .distinct()
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("src")))
     val nodes = ed.select(col("src").as("node")).distinct()
     var labels = nodes.select(col("node"), col("node").as("label"))
     for (_ <- 1 to iters) {
@@ -74,7 +73,7 @@ object LabelProp {
         .groupBy("node")
         .agg(min(struct((-col("c")).as("nc"), col("label"))).as("e"))
         .select(col("node"), col("e.label").as("label"))
-      labels = graft.plans.Plans.barrier(elected)
+      labels = barrier(elected)
     }
     (labels, ed)
   }

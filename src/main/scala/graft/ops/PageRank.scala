@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.plans.Plans.barrier
 
 /** Link-graph PageRank over a DataFrame edge list — crawl-frontier
   * prioritization (which domains to fetch deeper) and corpus-mix
@@ -27,13 +27,13 @@ import org.apache.spark.storage.StorageLevel
   * 85·rank ≤ 85·scale « 2^63.
   *
   * Scale shape: edges dedupe once (one exchange on the pair), then
-  * persist HASH-PARTITIONED BY src — every iteration's
-  * edges⋈ranks(src) join reuses that layout, so the per-iteration
-  * cost is one shuffle of (dst, contrib) partials (map-side
-  * combined) plus the nodes-sized left join. Ranks materialize
-  * per iteration (persist + count) to cut the lineage chain —
-  * K iterations are K bounded jobs, not one 2^K-deep plan. Driver
-  * state: the node count N, one scalar.
+  * materialize behind a [[graft.plans.Plans.barrier]] HASH-PARTITIONED
+  * BY src — every iteration's edges⋈ranks(src) join reuses that
+  * layout, so the per-iteration cost is one shuffle of (dst, contrib)
+  * partials (map-side combined) plus the nodes-sized left join. Every
+  * `checkpointInterval` rounds the ranks pass a barrier + count,
+  * which cuts the plan — K iterations are bounded jobs, not one
+  * K-deep plan. Driver state: the node count N, one scalar.
   */
 object PageRank {
 
@@ -51,31 +51,27 @@ object PageRank {
     require(checkpointInterval >= 1,
       s"checkpointInterval must be >= 1, got $checkpointInterval")
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val e = barrier(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("src")))
 
-    val nodes = e.select(col("src").as("node"))
+    val nodes = barrier(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val n = nodes.count() // bounded driver scalar
     require(n > 0, "empty graph")
 
-    // outdeg is a function of src alone — join it into the persisted
+    // outdeg is a function of src alone — join it into the barriered
     // edge list ONCE (r15, guide §2.4): the groupBy and the join both
-    // key on src, so on the src-partitioned persisted edges this is
+    // key on src, so on the src-partitioned barriered edges this is
     // one co-partitioned pass, and every iteration then pays a single
     // join (edges ⋈ ranks) instead of two
-    val ed = e.join(
-        e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val ed = barrier(e.join(
+        e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src"))
 
     val teleport = (15L * scale) / (100L * n)
     var ranks = nodes.withColumn("rank", lit(scale / n))
-    var lastPersisted: Option[DataFrame] = None
 
     for (i <- 1 to iters) {
       val contrib = ed
@@ -90,23 +86,19 @@ object PageRank {
         .join(contrib, nodes("node") === contrib("dst"), "left")
         .select(col("node"),
           (lit(teleport) + coalesce(col("contrib"), lit(0L))).as("rank"))
-      // cut the lineage every `checkpointInterval` rounds: persist +
-      // count (an eager barrier) bounds the plan depth for long runs
-      // while short runs stay a single lazy job with zero extra
-      // materializations
+      // cut the plan every `checkpointInterval` rounds: barrier +
+      // count bounds the plan depth for long runs while short runs
+      // stay a single lazy job with zero extra materializations
       if (i % checkpointInterval == 0 && i < iters) {
-        next = next.persist(StorageLevel.MEMORY_AND_DISK)
+        next = barrier(next)
         next.count()
-        lastPersisted.foreach(_.unpersist())
-        lastPersisted = Some(next)
       }
       ranks = next
     }
     ranks.select(col("node"), col("rank").as("rank_u"))
-    // NOTE: e/nodes/outdeg (and the last barrier frame) stay
-    // persisted until the result is consumed — they back the lazy
-    // final plan; Spark evicts them LRU, and callers that loop can
-    // spark.catalog.clearCache() between runs.
+    // NOTE: the barriered e/nodes/ed (and the last cut) back the lazy
+    // final plan; the ContextCleaner reclaims their blocks once the
+    // result frame is unreferenced, so nothing outlives the caller's use
   }
 
   /** Personalized (topic-sensitive) PageRank — Haveliwala 2002: the
@@ -139,32 +131,26 @@ object PageRank {
       scale: Long = 1000000000L,
       checkpointInterval: Int = 5): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val e = barrier(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node"))
+      .repartition(col("src")))
+    val nodes = barrier(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val s = seeds.select(col("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
+    val s = barrier(seeds.select(col("node")).distinct())
     val nSeeds = s.count() // bounded driver scalar
     require(nSeeds > 0, "empty seed set")
-    // outdeg pre-joined into the persisted edges once, as in [[run]]
-    val ed = e.join(
-        e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // outdeg pre-joined into the barriered edges once, as in [[run]]
+    val ed = barrier(e.join(
+        e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src"))
 
-    val flagged = nodes
+    val flagged = barrier(nodes
       .join(broadcast(s.withColumn("is_seed", lit(1L))), Seq("node"), "left")
-      .select(col("node"), coalesce(col("is_seed"), lit(0L)).as("is_seed"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(col("node"), coalesce(col("is_seed"), lit(0L)).as("is_seed")))
     val tele = (15L * scale) / (100L * nSeeds)
     var ranks = flagged.select(col("node"),
       (col("is_seed") * lit(scale / nSeeds)).as("rank"))
-    var lastPersisted: Option[DataFrame] = None
     for (i <- 1 to iters) {
       val contrib = ed
         .join(ranks, ed("src") === ranks("node"))
@@ -177,10 +163,8 @@ object PageRank {
           (col("is_seed") * lit(tele)
             + coalesce(col("contrib"), lit(0L))).as("rank"))
       if (i % checkpointInterval == 0 && i < iters) {
-        next = next.persist(StorageLevel.MEMORY_AND_DISK)
+        next = barrier(next)
         next.count()
-        lastPersisted.foreach(_.unpersist())
-        lastPersisted = Some(next)
       }
       ranks = next
     }

@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.plans.Plans.barrier
 
 /** Distributed byte-pair-encoding vocabulary training (Sennrich et
   * al. 2016, "Neural Machine Translation of Rare Words with Subword
@@ -17,8 +17,9 @@ import org.apache.spark.storage.StorageLevel
   * corpus scale, never corpus-sized). Per iteration: one
   * partial-aggregated pair count → a 1-row argmax collect (a bounded
   * driver scalar, the same pattern as PageRank's node count) → a
-  * codegen'd string replace over the word table. Lineage is cut by
-  * re-persisting the word table each round (predecessor unpersisted),
+  * codegen'd string replace over the word table. The word table sits
+  * behind one [[graft.plans.Plans.barrier]] and the replace chain is
+  * cut by an eager localCheckpoint every `checkpointInterval` rounds,
   * so N merges never build an N-deep replay chain. At PRODUCTION
   * vocabulary sizes (30k merges) use [[trainBatched]] — one
   * pair-count pass commits a whole provably-serial-equal batch of
@@ -69,7 +70,7 @@ object Bpe {
     * rhs, cnt) — nMerges driver-side rows by construction.
     *
     * Each round costs ONE job (the pair-count argmax); the replace
-    * chain stays lazy on top of the persisted base and is re-folded
+    * chain stays lazy on top of the barriered base and is re-folded
     * into the next round's scan (replaces are codegen'd projections —
     * replaying k of them is cheaper than materializing each round).
     * Every `checkpointInterval` rounds the chain is cut with an
@@ -87,9 +88,7 @@ object Bpe {
     require(nMerges >= 0, s"nMerges must be >= 0, got $nMerges")
     require(checkpointInterval >= 1,
       s"checkpointInterval must be >= 1, got $checkpointInterval")
-    var cur = words.select(col("cnt"), symbolize(col("word")).as("sym"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val base = cur
+    var cur = barrier(words.select(col("cnt"), symbolize(col("word")).as("sym")))
     val out = Seq.newBuilder[Merge]
     var stop = false
     for (k <- 1 to nMerges if !stop) {
@@ -107,11 +106,9 @@ object Bpe {
           // superseded checkpoint blocks are reclaimed by the
           // ContextCleaner once the old frame is unreferenced
           cur = cur.localCheckpoint(eager = true)
-          base.unpersist() // the persisted base is no longer read
         }
       }
     }
-    base.unpersist()
     out.result()
   }
 
@@ -468,9 +465,7 @@ object Bpe {
     require(scanWidth >= 1, s"scanWidth must be >= 1, got $scanWidth")
     require(checkpointInterval >= 1,
       s"checkpointInterval must be >= 1, got $checkpointInterval")
-    var cur = words.select(col("cnt"), symbolize(col("word")).as("sym"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val base = cur
+    var cur = barrier(words.select(col("cnt"), symbolize(col("word")).as("sym")))
     // every multi-char symbol in play is the fusion of a COMMITTED
     // merge (training starts from single chars), so this set is the
     // complete alphabet-of-fusions for the conflation guard
@@ -515,12 +510,10 @@ object Bpe {
           // Project chain grow one node per merge until the driver
           // OOMs building plan strings)
           cur = cur.localCheckpoint(eager = true)
-          base.unpersist()
           sinceCkpt = 0
         }
       }
     }
-    base.unpersist()
     BatchTrainStats(out.result(), passes, largestBatch)
   }
 
@@ -556,7 +549,7 @@ object Bpe {
         val folded = g.foldLeft(col("sym")) { (c, m) =>
           replace(c, lit(s" ${m.lhs}  ${m.rhs} "), lit(s" ${m.lhs}${m.rhs} "))
         }
-        cur = graft.plans.Plans.barrier(
+        cur = barrier(
           cur.select(col("cnt"), folded.as("sym")))
       }
       cur
@@ -706,7 +699,7 @@ object Bpe {
     * Every stage CTE is AS MATERIALIZED: w_{k-1} is referenced by
     * both pc_k and w_k, so INLINING would re-evaluate the whole
     * prefix 2^k times — materialization keeps the oracle linear in
-    * nMerges, mirroring the Spark side's per-round persist.
+    * nMerges, mirroring the Spark side's plan cuts.
     */
   def trainSql(wordsCte: String, nMerges: Int): String = {
     require(nMerges >= 1, // 0 rounds would generate an empty UNION body

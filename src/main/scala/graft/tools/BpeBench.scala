@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.storage.StorageLevel
 
 /** Diagnostic main measuring the BPE production-vocab path (VERDICT
   * r11 item 2): serial [[graft.text.Bpe.train]] (one Spark job per
@@ -54,7 +53,7 @@ object BpeBench {
     spark.sparkContext.setLogLevel("ERROR")
     import graft.text.Bpe
 
-    val words = (if (vocabSpec == "corpus")
+    val words = graft.plans.Plans.barrier(if (vocabSpec == "corpus")
       Bpe.wordCounts(
         graft.sources.Tables.load(spark, sfDir, "documents")
           .select("text"), "text")
@@ -87,7 +86,7 @@ object BpeBench {
         "cast(1000000 / (id + 1) as bigint) + 1 AS cnt")
         .groupBy("word").agg(
           org.apache.spark.sql.functions.sum("cnt").as("cnt"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     println(s"[bpebench] vocab=${words.count()} (spec=$vocabSpec) " +
       s"nMerges=$nMerges sf=$sfDir")
 
